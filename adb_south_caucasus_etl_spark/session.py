@@ -13,6 +13,50 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Measured best local heap on a 32-thread host (see the comment in get_spark).
+HEAP_CEILING_MIB = 16 * 1024
+# Spark's documented memory-overhead factor for non-JVM (PySpark) workloads
+# is 0.40: the JVM's off-heap use runs to ~40% of the heap on top of it.
+OVERHEAD_FACTOR = 1.4
+# cgroup v2, then v1; a container sees its own limit at these paths.
+_CGROUP_LIMIT_FILES = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def default_driver_memory(phys_bytes: int, cgroup_limit: str | None = None) -> str:
+    """Default driver heap for a host with ``phys_bytes`` of RAM and the raw
+    cgroup memory limit ``cgroup_limit`` (file contents, or None).
+
+    Usable memory is the smaller of the two; a cgroup limit of ``max`` (v2)
+    or the ~2^63 "unlimited" value (v1) never undercuts physical RAM. The
+    heap is ``min(16g, usable / OVERHEAD_FACTOR)``, in whole MiB.
+    """
+    usable = phys_bytes
+    if cgroup_limit is not None and cgroup_limit != "max":
+        usable = min(usable, int(cgroup_limit))
+    mib = int(usable / OVERHEAD_FACTOR) // 2**20
+    return "16g" if mib >= HEAP_CEILING_MIB else f"{mib}m"
+
+
+def _host_memory() -> tuple[int, str | None]:
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    for path in _CGROUP_LIMIT_FILES:
+        try:
+            with open(path) as f:
+                return phys, f.read().strip()
+        except OSError:
+            continue
+    return phys, None
+
+
+def driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else the host-capped default."""
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(
+        *_host_memory()
+    )
+
 
 def get_spark(app_name: str = "adb_south_caucasus_etl_spark") -> SparkSession:
     """Build (or fetch) the SparkSession.
@@ -20,6 +64,13 @@ def get_spark(app_name: str = "adb_south_caucasus_etl_spark") -> SparkSession:
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default ``*``).
     Shuffle partitions are sized to the local core count — on a real
     cluster you'd size to 2-3x total executor cores and let AQE coalesce.
+
+    ``SPARK_GRAFT_DRIVER_MEM`` sets the driver heap. Unset, it defaults to
+    ``min(16g, usable memory / 1.4)`` (see :func:`default_driver_memory`):
+    16g is the measured ceiling, and the cap keeps the heap plus its
+    off-heap overhead inside what the host (or its cgroup) can back. In
+    local mode the driver JVM is the whole engine, so an OOM kill takes
+    every later query down with it.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = f"local[{cpus}]"
@@ -81,9 +132,12 @@ def get_spark(app_name: str = "adb_south_caucasus_etl_spark") -> SparkSession:
         # whole engine's heap: 8g made 32 task threads GC/spill on the
         # shuffle-heavy graph/kNN queries (-25% at 16g: triangle 8.1->7.0s,
         # kNN 6.4->4.7s), while heaps past 16g start taxing the sub-second
-        # queries (GC geometry). On a real cluster this maps to executor
-        # memory instead.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        # queries (GC geometry). 16g is therefore the ceiling, capped to
+        # usable memory / 1.4 on smaller hosts: the JVM grows toward -Xmx
+        # lazily, and a heap the host cannot back ends in an OOM kill of
+        # the one process that runs every query. On a real cluster this
+        # maps to executor memory instead.
+        .config("spark.driver.memory", driver_memory())
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

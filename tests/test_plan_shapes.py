@@ -300,10 +300,29 @@ def test_aqe_skew_join_splits_hot_partition(spark):
     Thresholds are floored to make a synthetic 100k-row hot key qualify
     at test scale; the manual salting operators (skew_salted_agg/join)
     remain the pre-AQE / deterministic-layout alternative SCALE.md
-    documents."""
+    documents.
+
+    The shuffle partition count is pinned because AQE's skew rule reads
+    COMPRESSED shuffle bytes (skewed = bytes > factor x median). The
+    count-only aggregate prunes ``payload``, so only ``k`` is shuffled and
+    the 100k hot ``k=0`` rows compress to ~10 KB. That only stands out
+    when the other 100k rows are spread over enough partitions: with
+    factor 2, B_hot + B_other/N > 2 x B_other/N, i.e. B_hot > B_other/N,
+    which holds for N > ~11 here. Measured left-side partition bytes:
+
+      =====  ==========================================  ==========
+      N      bytes                                       split?
+      =====  ==========================================  ==========
+      4      [22776, 35680, 27560, 36682] (hot ~1.3x)    no
+      16     hot 12362 vs median ~2400                   yes
+      =====  ==========================================  ==========
+
+    ``spark.sql.shuffle.partitions`` otherwise follows the core count
+    (get_spark), so the test pins the 32 it was validated at."""
     from pyspark.sql import functions as F
 
     confs = {
+        "spark.sql.shuffle.partitions": "32",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "8KB",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8KB",
